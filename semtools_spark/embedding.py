@@ -206,20 +206,3 @@ def score_udf(
             yield pd.Series(1.0 - sims.astype(np.float64))
 
     return _score
-
-
-def cosine_distance_udf():
-    """pandas UDF: (array<float>, array<float>) → cosine distance. For
-    pre-embedded columns (e.g. the embeddings testdata table)."""
-
-    @F.pandas_udf(T.DoubleType())
-    def _dist(a: pd.Series, b: pd.Series) -> pd.Series:
-        amat = np.stack([np.asarray(x, dtype=np.float64) for x in a])
-        bmat = np.stack([np.asarray(x, dtype=np.float64) for x in b])
-        num = np.einsum("ij,ij->i", amat, bmat)
-        den = np.linalg.norm(amat, axis=1) * np.linalg.norm(bmat, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sim = np.where(den > 0, num / den, 0.0)
-        return pd.Series(1.0 - sim)
-
-    return _dist

@@ -60,8 +60,7 @@ def _unrolled_cosine_sql(a: str, b: str, dim: int) -> str:
 
 
 def cosine_distance_expr(a: str, b: str, dim: int | None = None) -> Column:
-    """1 − cosine similarity; 1.0 when either norm is zero (matches the
-    convention in embedding.cosine_distance_udf).
+    """1 − cosine similarity; 1.0 when either norm is zero.
 
     ``dim`` (optional) enables the unrolled whole-stage-codegen form for
     vectors statically known to have that length; rows whose arrays do

@@ -13,8 +13,8 @@ Stages (all DataFrame-native; pandas UDFs only at the embedding boundary):
      brute-force cosine scan, search/mod.rs:77-120, generalized from 1
      query to M mentions). The catalog is small (≤10^6 entities × 256
      floats = 1 GB ceiling; ours far less) — broadcast, never shuffled.
-     An LSH-bucketed variant (semtools_spark.operators.similarity) bounds
-     the per-row work when the catalog outgrows broadcast.
+     An LSH-bucketed variant (``use_lsh_above``) bounds the per-row work
+     when the catalog outgrows broadcast.
   3. connected_components: canonicalize co-referring surface forms with the
      alternating large-star/small-star algorithm (Kiveris et al.,
      "Connected Components in MapReduce and Beyond", public) — O(log n)
@@ -169,6 +169,33 @@ LINK_OUT_T = T.StructType(
 )
 
 
+#: distinct-mention count at or below which :func:`link_entities` scores
+#: on the driver (no Python workers) instead of through the broadcast UDF
+DRIVER_LINK_BELOW = 8192
+
+
+def _catalog_matrix(catalog: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """Collect the catalog's (entity_id, embedding) rows to the driver as
+    (int64 ids, L2-normalized float32 matrix); zero vectors stay zero."""
+    pdf = catalog.select("entity_id", "embedding").toPandas()
+    ids = np.asarray(pdf["entity_id"], dtype=np.int64)
+    mat = np.stack([np.asarray(v, dtype=np.float32) for v in pdf["embedding"]])
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0] = 1.0
+    return ids, (mat / norms[:, None]).astype(np.float32)
+
+
+def _top1(q: np.ndarray, ids: np.ndarray, matn: np.ndarray):
+    """Cosine top-1 of normalized mention embeddings ``q`` against the
+    normalized catalog ``(ids, matn)``: one float32 matmul, argmax (first
+    maximum wins a tie), float64 distance. Returns (entity_ids, distances).
+    float32 BLAS results depend on how many rows one call scores: callers
+    that batch differently agree to ~2e-7 in distance, not bit for bit."""
+    sims = q @ matn.T  # (n, |catalog|)
+    best = sims.argmax(axis=1)
+    return ids[best], 1.0 - sims[np.arange(len(q)), best].astype(np.float64)
+
+
 def _make_link_udf(bc, dim: int, seed: int):
     """Pandas UDF scoring mention batches against the BROADCAST catalog.
 
@@ -184,11 +211,8 @@ def _make_link_udf(bc, dim: int, seed: int):
         ids, matn = bc.value
         embedder = HashEmbedder(dim=dim, seed=seed)
         for s in batches:
-            q = embedder.embed_texts(s.fillna("").tolist())  # (n, dim), normalized
-            sims = q @ matn.T  # (n, |catalog|)
-            best = sims.argmax(axis=1)
-            dist = 1.0 - sims[np.arange(len(s)), best].astype(np.float64)
-            yield pd.DataFrame({"entity_id": ids[best], "link_distance": dist})
+            ent, dist = _top1(embedder.embed_texts(s.fillna("").tolist()), ids, matn)
+            yield pd.DataFrame({"entity_id": ent, "link_distance": dist})
 
     # asNondeterministic (guide §4.4): a max_distance filter over the
     # returned struct's link_distance otherwise pushes below the
@@ -196,6 +220,18 @@ def _make_link_udf(bc, dim: int, seed: int):
     # catalog matmul per row, twice. The scorer is a pure function of
     # (mention, broadcast catalog); results are unchanged.
     return _link.asNondeterministic()
+
+
+def _broadcast_link(distinct_m: DataFrame, bc, dim: int, seed: int, rescued: bool):
+    """(mention, entity_id, link_distance, rescued) for every row of
+    ``distinct_m``, scored by the broadcast-catalog UDF."""
+    link = _make_link_udf(bc, dim, seed)
+    return distinct_m.withColumn("__l", link(F.col("mention"))).select(
+        "mention",
+        F.col("__l.entity_id"),
+        F.col("__l.link_distance"),
+        F.lit(rescued).alias("rescued"),
+    )
 
 
 def link_entities(
@@ -208,33 +244,35 @@ def link_entities(
     max_distance: float | None = None,
     use_lsh_above: int | None = None,
     catalog_size: int | None = None,
-    driver_link_below: int = 8192,
 ) -> DataFrame:
     """Cosine top-1 link of each distinct mention surface form against the
     catalog — the M-query generalization of the reference's brute-force
-    scan (search/mod.rs:77-120), per Arrow batch ONE matmul + argmin.
+    scan (search/mod.rs:77-120): one matmul + argmax per scored batch.
 
-    Two physical strategies:
+    Three physical strategies:
 
-    * **broadcast** (default): the L2-normalized catalog matrix ships to
-      executors via ``SparkContext.broadcast`` — once per executor, never
-      per task — and each batch scores against all of it. Exact; right
-      while the catalog fits executor memory (≲1 GB).
+    * **driver**: at most ``DRIVER_LINK_BELOW`` distinct mentions are
+      collected and scored in-process against the collected catalog —
+      no Python workers in the plan.
+    * **broadcast**: larger mention sets score in a pandas UDF against
+      the L2-normalized catalog matrix, shipped to executors via
+      ``SparkContext.broadcast`` — once per executor, never per task.
+      Exact; right while the catalog fits executor memory (≲1 GB).
     * **LSH-bucketed** (``use_lsh_above=n``: engaged when the catalog
       exceeds n rows): mentions and catalog are embedded, signed into
       integer hyperplane buckets (similarity.int_hyperplane_signature),
       candidates joined WITHIN bucket with exact cosine re-rank — the
       shuffle key is the bucket, never all-pairs. Mentions whose bucket
-      holds no catalog entry fall back to an exact distributed
-      cross-score (few rows × catalog, windowed top-1) so every mention
-      still links. Exact surface-form matches always collide (identical
-      vector ⇒ identical signature).
+      holds no catalog entry fall back to a broadcast scoring against a
+      bounded catalog sample so every mention still links. Exact
+      surface-form matches always collide (identical vector ⇒ identical
+      signature).
 
     Returns (mention, entity_id, link_distance, rescued). ``rescued`` is
-    False everywhere on the broadcast path (it is exact); on the LSH path
-    it marks links produced by the bounded best-effort rescue tier —
-    approximate by construction, so quality-sensitive callers threshold
-    them (``max_distance`` applies to rescue rows like any other).
+    False everywhere on the exact paths; on the LSH path it marks links
+    produced by the bounded best-effort rescue tier — approximate by
+    construction, so quality-sensitive callers threshold them
+    (``max_distance`` applies to rescue rows like any other).
     Distinct mentions are linked once, then the (small) mapping can be
     broadcast-joined back to the full mention stream by the caller.
 
@@ -242,11 +280,12 @@ def link_entities(
     strategy-picking ``count()`` job when ``use_lsh_above`` is set —
     callers that just built the catalog know its size.
 
-    The broadcast path attaches its Broadcast handle to the returned
-    DataFrame as ``_semtools_broadcasts``; callers that materialize the
-    result (e.g. the pipeline stage write) should ``unpersist()`` those to
-    release executor blocks in long-lived sessions (a later re-evaluation
-    lazily re-broadcasts, so unpersist is always safe).
+    The Broadcast handles the result depends on are attached to the
+    returned DataFrame as ``_semtools_broadcasts`` (empty on the driver
+    path); callers that materialize the result (e.g. the pipeline stage
+    write) should ``unpersist()`` those to release executor blocks in
+    long-lived sessions (a later re-evaluation lazily re-broadcasts, so
+    unpersist is always safe).
     """
     spark = mentions.sparkSession
     distinct_m = mentions.select(F.col(mention_col).alias("mention")).distinct()
@@ -255,86 +294,78 @@ def link_entities(
     if use_lsh_above is not None:
         n_cat = catalog_size if catalog_size is not None else catalog.count()
         use_lsh = n_cat > use_lsh_above
+    broadcasts = []
     if use_lsh:
-        linked = _link_entities_lsh(
-            distinct_m, catalog, dim=dim, seed=seed,
-            catalog_size=(catalog_size if catalog_size is not None else n_cat),
+        linked, bc = _link_entities_lsh(
+            distinct_m, catalog, dim=dim, seed=seed, catalog_size=n_cat
         )
-        broadcasts = getattr(linked, "_semtools_broadcasts", [])
+        broadcasts = [bc]
     else:
-        pdf = catalog.select("entity_id", "embedding").toPandas()
-        ids = np.asarray(pdf["entity_id"], dtype=np.int64)
-        mat = np.stack([np.asarray(v, dtype=np.float32) for v in pdf["embedding"]])
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0] = 1.0
-        matn = (mat / norms[:, None]).astype(np.float32)
+        ids, matn = _catalog_matrix(catalog)
         # Adaptive driver link (the connected_components small-graph
         # philosophy applied here): when the DISTINCT surface-form set is
         # small — bounded extraction vocabularies, early corpus slices —
-        # collect it and run the same NumPy scoring in-process. This
-        # removes the whole Python-worker machinery from the plan (the
-        # first pandas-UDF job of a session forks + imports numpy/pandas
-        # in every worker: measured ~3 s of the flagship pipeline's link
-        # stage, guide §4). Bit-identical to the UDF path: same embedder,
-        # same float32 matmul per row (row results are independent of
-        # batching), same argmax tie-break and float64 distance. The
-        # bounded ``limit(n+1)`` probe decides without a full count; web-
-        # scale mention sets exceed it and take the broadcast-UDF path.
+        # collect it and score it in-process. This removes the whole
+        # Python-worker machinery from the plan (the first pandas-UDF job
+        # of a session forks + imports numpy/pandas in every worker:
+        # measured ~3 s of the flagship pipeline's link stage, guide §4).
+        # Both paths run _top1 on the same embedder but are NOT
+        # bit-identical: the driver scores every probed mention in one
+        # call, the UDF per Arrow batch, so link_distance can differ by
+        # ~2e-7 and a near-tie (top-1 margin ≲1e-6) can link to another
+        # entity (pinned by test_link_paths_agree_property).
+        # The bounded ``limit(n+1)`` probe decides without a full count;
+        # web-scale mention sets exceed it and take the broadcast path.
         probe = (
-            distinct_m.limit(driver_link_below + 1).collect()
-            if driver_link_below and driver_link_below > 0
+            distinct_m.limit(DRIVER_LINK_BELOW + 1).collect()
+            if DRIVER_LINK_BELOW > 0
             else None
         )
-        if probe is not None and len(probe) <= driver_link_below:
+        if probe is not None and len(probe) <= DRIVER_LINK_BELOW:
             embedder = HashEmbedder(dim=dim, seed=seed)
             texts = [r.mention if r.mention is not None else "" for r in probe]
-            q = embedder.embed_texts(texts)
-            sims = q @ matn.T
-            best = sims.argmax(axis=1)
-            dist = 1.0 - sims[np.arange(len(texts)), best].astype(np.float64)
+            ent, dist = _top1(embedder.embed_texts(texts), ids, matn)
             schema = T.StructType(
-                [
-                    T.StructField("mention", T.StringType()),
-                    T.StructField("entity_id", T.LongType()),
-                    T.StructField("link_distance", T.DoubleType()),
-                    T.StructField("rescued", T.BooleanType(), False),
-                ]
+                [T.StructField("mention", T.StringType())]
+                + LINK_OUT_T.fields
+                + [T.StructField("rescued", T.BooleanType(), False)]
             )
             linked = spark.createDataFrame(
                 [
-                    (r.mention, int(ids[b]), float(d), False)
-                    for r, b, d in zip(probe, best, dist)
+                    (r.mention, int(e), float(d), False)
+                    for r, e, d in zip(probe, ent, dist)
                 ],
                 schema,
             )
-            linked._semtools_broadcasts = []
-            if max_distance is not None:
-                linked = linked.filter(F.col("link_distance") < float(max_distance))
-                linked._semtools_broadcasts = []
-            return linked
-        bc = spark.sparkContext.broadcast((ids, matn))
-        broadcasts = [bc]
-        _link = _make_link_udf(bc, dim, seed)
-        linked = distinct_m.withColumn("__l", _link(F.col("mention"))).select(
-            "mention",
-            F.col("__l.entity_id"),
-            F.col("__l.link_distance"),
-            F.lit(False).alias("rescued"),
-        )
+        else:
+            bc = spark.sparkContext.broadcast((ids, matn))
+            broadcasts = [bc]
+            linked = _broadcast_link(distinct_m, bc, dim, seed, rescued=False)
     if max_distance is not None:
         linked = linked.filter(F.col("link_distance") < float(max_distance))
     linked._semtools_broadcasts = broadcasts
     return linked
 
 
+def _int_sign(mat: np.ndarray, w: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """NumPy twin of similarity.int_hyperplane_signature: floor(1e6·x) on
+    the float64-widened vectors (the same IEEE op as the JVM side), exact
+    int64 dot with the ±1 plane weights ``w``, one sign bit per plane.
+    Returns (dots (n, n_planes), bucket (n,))."""
+    f = np.floor(np.asarray(mat, dtype=np.float64) * 1000000.0).astype(np.int64)
+    dots = f @ w.T  # exact int64
+    bits = 1 << np.arange(w.shape[0], dtype=np.int64)
+    return dots, ((dots > 0) * bits).sum(axis=1)
+
+
 def _embed_probe_udf(dim: int, seed: int, n_planes: int, n_probes: int):
     """Fused mention → (embedding, probe_buckets) pandas UDF: ONE Python
-    boundary crossing instead of embed-UDF + a JVM multi-probe signature
+    boundary crossing instead of an embed UDF + a separate signature
     pass (guide §4.2 — batch the custom math into vectorized NumPy).
-    Bit-identical to similarity.multi_probe_signatures: floor(1e6·x) on
-    the float64-widened float32 embedding is the same IEEE op either
-    side, the ±1-weight dot is exact int64, and the flip order
-    (|dot| asc, plane asc) matches the struct array_sort tie-break."""
+    ``probe_buckets`` is multi-probe LSH (Lv et al. VLDB'07): the exact
+    integer signature first (equal to similarity.int_hyperplane_signature
+    of the embedding), then the ``n_probes`` lowest-|dot| (least
+    confident) bits flipped, ties to the lower plane index."""
     from semtools_spark.operators.similarity import int_plane_weights
 
     w = int_plane_weights(n_planes, dim, seed)
@@ -348,15 +379,12 @@ def _embed_probe_udf(dim: int, seed: int, n_planes: int, n_probes: int):
     @F.pandas_udf(out_t)
     def _ep(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         embedder = HashEmbedder(dim=dim, seed=seed)
-        bits = 1 << np.arange(n_planes, dtype=np.int64)
         for s in batches:
             if len(s) == 0:
                 yield pd.DataFrame({"embedding": [], "probe_buckets": []})
                 continue
             mat = embedder.embed_texts(s.fillna("").tolist())  # (n, dim) f32
-            f = np.floor(mat.astype(np.float64) * 1000000.0).astype(np.int64)
-            dots = f @ w.T  # exact int64
-            base = ((dots > 0) * bits).sum(axis=1)
+            dots, base = _int_sign(mat, w)
             order = np.argsort(np.abs(dots), axis=1, kind="stable")[:, :n_probes]
             flips = base[:, None] ^ (np.int64(1) << order.astype(np.int64))
             buckets = np.concatenate([base[:, None], flips], axis=1)
@@ -369,17 +397,16 @@ def _embed_probe_udf(dim: int, seed: int, n_planes: int, n_probes: int):
 
 def _int_signature_udf(dim: int, seed: int, n_planes: int):
     """Arrow-vectorized twin of similarity.int_hyperplane_signature for
-    pre-embedded float32 arrays: floors → exact int64 ±1 dot → sign bits,
-    one NumPy matmul per batch (the JVM fold runs interpreted per element
-    per plane — at n_planes·|catalog| scale that was the second-largest
-    cost of the LSH link). Raises on a dim mismatch like _dim_guard."""
+    pre-embedded float32 arrays: one NumPy matmul per batch (the JVM fold
+    runs interpreted per element per plane — at n_planes·|catalog| scale
+    that was the second-largest cost of the LSH link). Raises on a dim
+    mismatch like _dim_guard."""
     from semtools_spark.operators.similarity import int_plane_weights
 
     w = int_plane_weights(n_planes, dim, seed)
 
     @F.pandas_udf(T.LongType())
     def _sig(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        bits = 1 << np.arange(n_planes, dtype=np.int64)
         for s in batches:
             if len(s) == 0:
                 yield pd.Series([], dtype="int64")
@@ -395,8 +422,7 @@ def _int_signature_udf(dim: int, seed: int, n_planes: int):
                     f"expected embedding vectors of length {dim}, "
                     f"got length {mat.shape[1]}"
                 )
-            f = np.floor(mat * 1000000.0).astype(np.int64)
-            yield pd.Series(((f @ w.T > 0) * bits).sum(axis=1))
+            yield pd.Series(_int_sign(mat, w)[1])
 
     return _sig
 
@@ -411,8 +437,9 @@ def _link_entities_lsh(
     n_probes: int = 2,
     max_rescue_catalog: int = 10_000,
     catalog_size: int | None = None,
-) -> DataFrame:
-    """LSH-bucketed linking for catalogs too big to broadcast.
+) -> tuple[DataFrame, object]:
+    """LSH-bucketed linking for catalogs too big to broadcast. Returns
+    (linked, Broadcast of the rescue tier's catalog sample).
 
     ``n_planes=None`` (default) scales the hyperplane count with the
     catalog: ``max(8, bit_length(|catalog| // 32))``, clamped to 20 —
@@ -443,7 +470,7 @@ def _link_entities_lsh(
        entities (order by xxhash64(entity_id, seed), TakeOrdered — no
        full sort, deterministic per seed; r4 took "first N by id", a
        biased subset that systematically excluded high-id entities) via
-       the same broadcast Arrow matmul as the small-catalog path:
+       the same broadcast UDF as the exact broadcast path:
        map-only, memory bounded by the cap, best effort by construction
        (tiers 1-2 make reaching it rare). Every mention still links, and
        every rescue row is flagged ``rescued=true`` so callers can
@@ -560,29 +587,16 @@ def _link_entities_lsh(
         .distinct()
     )
     missed = m_probe.select("mention").join(hit, "mention", "left_anti")
+    # seeded pseudo-random subset: unbiased across the id range and
+    # deterministic per seed; limit over this sort is TakeOrdered
     sample = (
         catalog.select("entity_id", "embedding")
-        # seeded pseudo-random subset: unbiased across the id range and
-        # deterministic per seed; limit over this sort is TakeOrdered
         .orderBy(F.xxhash64(F.col("entity_id"), F.lit(seed)), F.col("entity_id"))
         .limit(max_rescue_catalog)
-        .toPandas()
     )
-    ids = np.asarray(sample["entity_id"], dtype=np.int64)
-    mat = np.stack([np.asarray(v, dtype=np.float32) for v in sample["embedding"]])
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    bc = spark.sparkContext.broadcast((ids, (mat / norms[:, None]).astype(np.float32)))
-    _link = _make_link_udf(bc, dim, seed)
-    rescue = missed.withColumn("__l", _link(F.col("mention"))).select(
-        "mention",
-        F.col("__l.entity_id"),
-        F.col("__l.link_distance"),
-        F.lit(True).alias("rescued"),
-    )
-    out = top1.withColumn("rescued", F.lit(False)).unionByName(rescue)
-    out._semtools_broadcasts = [bc]
-    return out
+    bc = spark.sparkContext.broadcast(_catalog_matrix(sample))
+    rescue = _broadcast_link(missed, bc, dim, seed, rescued=True)
+    return top1.withColumn("rescued", F.lit(False)).unionByName(rescue), bc
 
 
 def _latest_cc_round(spark: SparkSession, checkpoint_dir: str) -> int:
@@ -946,6 +960,38 @@ def canonicalize_mentions(
     )
 
 
+def triple_mentions(triples: DataFrame) -> DataFrame:
+    """Every subject and object surface form of ``triples`` as one
+    ``mention`` column (UNION ALL; link_entities takes the distinct)."""
+    return triples.select(F.col("subj").alias("mention")).union(
+        triples.select(F.col("obj").alias("mention"))
+    )
+
+
+def canonical_graph(triples: DataFrame, canon: DataFrame) -> DataFrame:
+    """Canonical triples with provenance counts: ``triples`` joined to
+    ``canon`` (:func:`canonicalize_mentions` output) on subject and on
+    object, then grouped. Returns (subj, pred, obj, subj_id, obj_id,
+    n_mentions).
+
+    No static broadcast hint: canon has one row per distinct surface
+    form — bounded today, unbounded under a generalized extractor — so
+    AQE picks broadcast when that side is actually small and falls back
+    to a shuffle join when it isn't."""
+    c_subj = canon.select(
+        F.col("mention").alias("subj"), F.col("canonical_id").alias("subj_id")
+    )
+    c_obj = canon.select(
+        F.col("mention").alias("obj"), F.col("canonical_id").alias("obj_id")
+    )
+    return (
+        triples.join(c_subj, "subj", "left")
+        .join(c_obj, "obj", "left")
+        .groupBy("subj", "pred", "obj", "subj_id", "obj_id")
+        .agg(F.count("*").alias("n_mentions"))
+    )
+
+
 def materialize_graph(
     triples: DataFrame, out_dir: str, num_buckets: int = 32
 ) -> dict[str, str]:
@@ -1019,25 +1065,6 @@ def kg_pipeline(
     spark = docs.sparkSession
     triples = extract_triples(docs, id_col=id_col, text_col=text_col)
     catalog = build_entity_catalog(spark, dim=dim, seed=seed)
-    mentions = (
-        triples.select(F.col("subj").alias("mention"))
-        .union(triples.select(F.col("obj").alias("mention")))
-    )
-    linked = link_entities(mentions, catalog, dim=dim, seed=seed)
+    linked = link_entities(triple_mentions(triples), catalog, dim=dim, seed=seed)
     canon = canonicalize_mentions(linked)
-    c_subj = canon.select(
-        F.col("mention").alias("subj"), F.col("canonical_id").alias("subj_id")
-    )
-    c_obj = canon.select(
-        F.col("mention").alias("obj"), F.col("canonical_id").alias("obj_id")
-    )
-    # no static broadcast hint: canon is one row per distinct surface
-    # form — unbounded under a generalized extractor, so let AQE choose
-    # the join strategy at runtime (VERDICT r5 wrong #2)
-    return (
-        triples.join(c_subj, "subj", "left")
-        .join(c_obj, "obj", "left")
-        .groupBy("subj", "pred", "obj", "subj_id", "obj_id")
-        .agg(F.count("*").alias("n_mentions"))
-        .orderBy("subj", "pred", "obj")
-    )
+    return canonical_graph(triples, canon).orderBy("subj", "pred", "obj")

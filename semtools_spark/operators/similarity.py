@@ -5,9 +5,9 @@ brute_force_topk     exact cosine top-k per query against the corpus —
                      one query; window row_number for query batches.
 knn_within_blocks    per-row top-k neighbors inside explicit blocks
                      (label / LSH bucket) — the bounded-pairs pattern.
-lsh_bucket_ann       random-hyperplane LSH: signature → bucket, candidates
-                     from same bucket (∪ probe buckets), exact re-rank.
-                     The scale path: shuffles on the bucket key only.
+int_hyperplane_signature
+                     random-hyperplane LSH bucket with integer arithmetic —
+                     the block key for knn_within_blocks at scale.
 
 Distances are floor()ed to integer micro-units so oracle comparison is
 representation-stable.
@@ -94,39 +94,6 @@ def knn_within_blocks(
     )
 
 
-def hyperplane_signature(
-    emb: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH signature (int bucket 0..2^n_planes−1),
-    JVM-side: sign of dot(v, h_j) per seeded hyperplane. The hyperplanes
-    are md5-seeded Gaussians — reproducible anywhere."""
-    rng = np.random.Generator(np.random.Philox(key=seed))
-    planes = rng.standard_normal((n_planes, dim))
-    sig = None
-    out = emb
-    for j in range(n_planes):
-        term = (
-            F.when(
-                F.expr(
-                    "aggregate(zip_with({v}, array({h}), (x, y) -> CAST(x AS DOUBLE) * y), "
-                    "0.0D, (acc, t) -> acc + t)".format(
-                        v=vec_col, h=", ".join(f"{x!r}D" for x in planes[j])
-                    )
-                )
-                > 0,
-                F.lit(1 << j),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-        )
-        sig = term if sig is None else (sig + term)
-    return out.withColumn("lsh_bucket", _dim_guard(vec_col, dim, sig))
-
-
 def int_plane_weights(n_planes: int, dim: int, seed: int = 42) -> np.ndarray:
     """±1 hyperplane weights, Philox-seeded — computed driver-side and
     inlined as literals in both engine renderings. A previous in-SQL
@@ -166,67 +133,6 @@ def int_hyperplane_signature(
         term = F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0)).cast("long")
         sig = term if sig is None else (sig + term)
     return emb.withColumn(out_col, _dim_guard(vec_col, dim, sig))
-
-
-
-def multi_probe_signatures(
-    emb: DataFrame,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    n_probes: int = 2,
-    out_col: str = "probe_buckets",
-) -> DataFrame:
-    """Multi-probe LSH: ``array<long>`` of ``1 + n_probes`` candidate
-    buckets per row — the exact signature first, then variants with the
-    n_probes LOWEST-|dot| (least confident) signature bits flipped, in
-    confidence order. A vector near a hyperplane lands in the adjacent
-    bucket under small perturbations; probing those buckets recovers most
-    bucket-miss candidates WITHOUT any fallback scan (the standard
-    multi-probe LSH argument, Lv et al. VLDB'07).
-
-    Same integer micro-unit dot arithmetic as
-    :func:`int_hyperplane_signature` — ``probe_buckets[0]`` equals its
-    ``lsh_bucket`` exactly. Map-only JVM expressions (no Python)."""
-    if n_probes >= n_planes:
-        raise ValueError(f"n_probes ({n_probes}) must be < n_planes ({n_planes})")
-    weights = int_plane_weights(n_planes, dim, seed)
-    dot_exprs = []
-    for j in range(n_planes):
-        warr = ", ".join(str(int(w)) for w in weights[j])
-        dot_exprs.append(
-            f"aggregate(zip_with({vec_col}, array({warr}), "
-            f"(x, w) -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT) * w), "
-            f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-    dots = F.expr("array(" + ", ".join(dot_exprs) + ")")
-    base = F.expr(
-        "aggregate(sequence(0, {n}), CAST(0 AS BIGINT), (acc, j) -> "
-        "acc + CASE WHEN __mp_dots[j] > 0 THEN shiftleft(CAST(1 AS BIGINT), j) "
-        "ELSE CAST(0 AS BIGINT) END)".format(n=n_planes - 1)
-    )
-    # bit indices ordered by |dot| ascending (ties → lower index): struct
-    # array_sort orders lexicographically by (|dot|, j)
-    flip_order = F.expr(
-        "transform(array_sort(transform(sequence(0, {n}), "
-        "j -> struct(abs(__mp_dots[j]) AS a, j AS j))), s -> s.j)".format(
-            n=n_planes - 1
-        )
-    )
-    buckets = F.expr(
-        "concat(array(__mp_base), transform(slice(__mp_flips, 1, {k}), "
-        "j -> CAST(__mp_base ^ shiftleft(CAST(1 AS BIGINT), j) AS BIGINT)))".format(
-            k=n_probes
-        )
-    )
-    return (
-        emb.withColumn("__mp_dots", _dim_guard(vec_col, dim, dots))
-        .withColumn("__mp_base", base)
-        .withColumn("__mp_flips", flip_order)
-        .withColumn(out_col, buckets)
-        .drop("__mp_dots", "__mp_base", "__mp_flips")
-    )
 
 
 def int_hyperplane_signature_sql_duckdb(
@@ -512,22 +418,3 @@ def ivf_topk_indexed(
         )
     )
     return scored.orderBy("dist_micro", id_col).limit(k)
-
-
-def lsh_bucket_ann(
-    emb: DataFrame,
-    k: int = 1,
-    n_planes: int = 8,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_filter=None,
-) -> DataFrame:
-    """Approximate kNN: candidates share an LSH bucket, exact cosine
-    re-rank within bucket. Same output shape as knn_within_blocks."""
-    bucketed = hyperplane_signature(emb, n_planes, dim, seed, vec_col)
-    return knn_within_blocks(
-        bucketed, k=k, id_col=id_col, vec_col=vec_col,
-        block_col="lsh_bucket", query_filter=query_filter, dim=dim,
-    )

@@ -175,12 +175,9 @@ def refresh_graph(
     those batches' pages (pinned by the equivalence test)."""
     out = out_dir.rstrip("/")
     triples = accumulated_triples(spark, out_dir)
-    mentions = triples.select(F.col("subj").alias("mention")).union(
-        triples.select(F.col("obj").alias("mention"))
-    )
     catalog = kg.build_entity_catalog(spark, dim=dim, seed=seed)
     link = kg.link_entities(
-        mentions,
+        kg.triple_mentions(triples),
         catalog,
         dim=dim,
         seed=seed,
@@ -188,25 +185,19 @@ def refresh_graph(
         use_lsh_above=link_lsh_above,
         catalog_size=len(kg.ENTITIES),
     )
-    link.write.mode("overwrite").parquet(f"{out}/link.parquet")
+    try:
+        link.write.mode("overwrite").parquet(f"{out}/link.parquet")
+    finally:
+        # release the link's catalog broadcasts once materialized, as
+        # pipeline.run_stage does (the LSH rescue tier always broadcasts)
+        for b in link._semtools_broadcasts:
+            b.unpersist()
     canon = kg.canonicalize_mentions(
         spark.read.parquet(f"{out}/link.parquet"),
         cc_checkpoint_dir=cc_checkpoint_dir,
     )
     canon.write.mode("overwrite").parquet(f"{out}/canon.parquet")
-    canon = spark.read.parquet(f"{out}/canon.parquet")
-    c_subj = canon.select(
-        F.col("mention").alias("subj"), F.col("canonical_id").alias("subj_id")
-    )
-    c_obj = canon.select(
-        F.col("mention").alias("obj"), F.col("canonical_id").alias("obj_id")
-    )
-    graph = (
-        triples.join(c_subj, "subj", "left")
-        .join(c_obj, "obj", "left")
-        .groupBy("subj", "pred", "obj", "subj_id", "obj_id")
-        .agg(F.count("*").alias("n_mentions"))
-    )
+    graph = kg.canonical_graph(triples, spark.read.parquet(f"{out}/canon.parquet"))
     graph.write.mode("overwrite").parquet(f"{out}/graph.parquet")
     n = spark.read.parquet(f"{out}/graph.parquet").count()
     return {

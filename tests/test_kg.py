@@ -352,7 +352,8 @@ def test_link_entities_lsh_path(spark):
     assert got["spark"][0] == names.index("spark") and got["spark"][1] < 1e-6
     assert got["table"][0] == names.index("table") and got["table"][1] < 1e-6
     assert got["row"][0] == names.index("row") and got["row"][1] < 1e-6
-    # broadcast path agrees on the exact-match mentions
+    # the exact (driver, for 4 mentions) path agrees on the exact-match
+    # mentions
     brute = {r.mention: r.entity_id for r in
              kg.link_entities(mentions, catalog, dim=64).collect()}
     for m in ("spark", "table", "row"):
@@ -427,9 +428,10 @@ def test_link_lsh_auto_planes_scale_with_catalog_and_keep_total_recall(spark):
     mentions = spark.createDataFrame(
         [("spark",), ("table",), ("not in catalog at all",)], ["mention"]
     )
-    out = kg._link_entities_lsh(
+    out, _ = kg._link_entities_lsh(
         mentions, catalog, dim=16, seed=kg.DEFAULT_SEED, n_planes=16
-    ).collect()
+    )
+    out = out.collect()
     assert len(out) == 3  # nothing dropped: misses fall to the rescue tier
     by_m = {r.mention: r for r in out}
     assert by_m["spark"].entity_id is not None
@@ -492,7 +494,7 @@ def test_link_lsh_auto_planes_scale_with_catalog_and_keep_total_recall(spark):
     assert sum(1 for _, bp, bg in forced if bp != bg) >= 20
 
     mdf = spark.createDataFrame([(m,) for m in mentions], ["mention"])
-    linked = kg._link_entities_lsh(
+    linked, _ = kg._link_entities_lsh(
         mdf, catalog, dim=dim, seed=seed, n_planes=n_planes, n_probes=n_probes
     )
     plan = linked._jdf.queryExecution().executedPlan().toString()
@@ -540,7 +542,7 @@ def test_lsh_rescue_sample_is_seeded_and_flagged(spark):
     # 16 planes over 50 entities → nonsense mentions miss every probe
     # bucket and fall through to the rescue tier (verified non-vacuous
     # below); the rescue catalog is a 5-entity seeded sample
-    linked = kg._link_entities_lsh(
+    linked, _ = kg._link_entities_lsh(
         mentions, catalog, dim=64, seed=42, n_planes=16, n_probes=1,
         max_rescue_catalog=5,
     )
@@ -557,15 +559,104 @@ def test_lsh_rescue_sample_is_seeded_and_flagged(spark):
     again = {r.mention: (r.entity_id, r.rescued) for r in kg._link_entities_lsh(
         mentions, catalog, dim=64, seed=42, n_planes=16, n_probes=1,
         max_rescue_catalog=5,
-    ).collect()}
+    )[0].collect()}
     assert again == {m: (r.entity_id, r.rescued) for m, r in rows.items()}
 
 
-def test_link_entities_rescued_column_uniform(spark):
-    """Both physical strategies return the same schema: the broadcast
-    (exact) path emits rescued=false everywhere."""
+def test_link_entities_rescued_column_uniform(spark, monkeypatch):
+    """Both exact strategies return the LSH path's schema with
+    rescued=false everywhere: the driver path (2 mentions) and, with
+    DRIVER_LINK_BELOW forced to 0, the broadcast path."""
     catalog = kg.build_entity_catalog(spark, ["spark", "table"], dim=64)
     mentions = spark.createDataFrame([("spark",), ("xyz",)], ["mention"])
-    out = kg.link_entities(mentions, catalog, dim=64)
-    assert "rescued" in out.columns
-    assert all(not r.rescued for r in out.collect())
+    for below in (kg.DRIVER_LINK_BELOW, 0):
+        monkeypatch.setattr(kg, "DRIVER_LINK_BELOW", below)
+        out = kg.link_entities(mentions, catalog, dim=64)
+        assert out.columns == ["mention", "entity_id", "link_distance", "rescued"]
+        rows = out.collect()
+        assert len(rows) == 2 and all(not r.rescued for r in rows)
+
+
+def _arrow_evals(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.count("ArrowEvalPython")
+
+
+def test_link_plans_score_once(spark, monkeypatch):
+    """The driver path plans no Python UDF at all; the broadcast path
+    plans exactly ONE scoring UDF with and without max_distance (a
+    pushed-down filter over the UDF's struct would clone it — the whole
+    catalog matmul per row, twice)."""
+    catalog = kg.build_entity_catalog(spark, ["spark", "table", "row"], dim=64)
+    mentions = spark.createDataFrame([("spark",), ("xyz",), ("row",)], ["mention"])
+    for md in (None, 0.5):
+        assert _arrow_evals(kg.link_entities(mentions, catalog, dim=64, max_distance=md)) == 0
+    monkeypatch.setattr(kg, "DRIVER_LINK_BELOW", 0)
+    for md in (None, 0.5):
+        out = kg.link_entities(mentions, catalog, dim=64, max_distance=md)
+        assert _arrow_evals(out) == 1, md
+        assert len(out._semtools_broadcasts) == 1
+        got = {r.mention for r in out.collect()}
+        assert got == ({"spark", "row"} if md else {"spark", "xyz", "row"})
+
+
+def test_link_paths_agree_property(spark, monkeypatch):
+    """Differential property over random catalogs and mention sets: the
+    driver and broadcast exact paths link the same mentions, to the same
+    entity wherever the float64 top-1 margin exceeds 1e-6, with
+    link_distance within 1e-6 (float32 BLAS results depend on the batch
+    size, so the two paths are close, not bit-identical); the LSH path
+    links every exact surface form to the exact path's entity at
+    distance < 1e-6. Catalogs include one-entity and duplicate-vector
+    cases (duplicate or word-permuted names); mentions include ""."""
+    import numpy as np
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    from semtools_spark.embedding import HashEmbedder
+
+    words = st.sampled_from(["spark", "table", "row", "join", "data", "zq", "vv"])
+    phrase = st.lists(words, min_size=1, max_size=3).map(" ".join)
+    mention = st.one_of(st.just(""), phrase)
+
+    def link(mdf, catalog, dim, **kw):
+        return {
+            r.mention: (r.entity_id, r.link_distance)
+            for r in kg.link_entities(mdf, catalog, dim=dim, **kw).collect()
+        }
+
+    @settings(
+        max_examples=6,
+        deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(
+        st.sampled_from([16, 64]),
+        st.lists(phrase, min_size=1, max_size=10),
+        st.lists(mention, min_size=1, max_size=15),
+    )
+    def check(dim, names, mentions):
+        catalog = kg.build_entity_catalog(spark, names, dim=dim)
+        mdf = spark.createDataFrame([(m,) for m in mentions], "mention string")
+        driver = link(mdf, catalog, dim)
+        with monkeypatch.context() as mp:
+            mp.setattr(kg, "DRIVER_LINK_BELOW", 0)
+            bcast = link(mdf, catalog, dim)
+        lsh = link(mdf, catalog, dim, use_lsh_above=0, catalog_size=len(names))
+
+        assert set(driver) == set(bcast) == set(mentions)
+        emb = HashEmbedder(dim=dim)
+        cat = emb.embed_texts(names).astype(np.float64)
+        cat /= np.maximum(np.linalg.norm(cat, axis=1, keepdims=True), 1e-300)
+        for m in driver:
+            sims = np.sort(cat @ emb.embed_texts([m])[0].astype(np.float64))[::-1]
+            margin = sims[0] - sims[1] if len(sims) > 1 else np.inf
+            if margin > 1e-6:
+                assert driver[m][0] == bcast[m][0], (m, driver[m], bcast[m])
+                if m in names:
+                    assert lsh[m][0] == driver[m][0], (m, lsh[m], driver[m])
+            assert abs(driver[m][1] - bcast[m][1]) <= 1e-6, (m, driver[m], bcast[m])
+            if m in names:
+                assert lsh[m][1] < 1e-6, (m, lsh[m])
+
+    check()

@@ -48,19 +48,6 @@ def test_int_signature_spreads_buckets(spark):
     assert len(buckets) >= 64, f"only {len(buckets)} distinct buckets"
 
 
-def test_lsh_bucket_ann_subset_of_blocked_knn(spark, embeddings):
-    """LSH-bucketed kNN returns valid pairs: every reported neighbor shares
-    the query's bucket and the distance is the true cosine distance."""
-    e = embeddings.limit(200)
-    res = similarity.lsh_bucket_ann(e, k=1, n_planes=4, dim=64)
-    rows = res.collect()
-    assert rows, "LSH ANN returned nothing"
-    bucketed = {r.vec_id: r.lsh_bucket for r in
-                similarity.hyperplane_signature(e, n_planes=4, dim=64).collect()}
-    for r in rows:
-        assert bucketed[r.q] == bucketed[r.neighbor]
-
-
 def test_embedding_near_dups_threshold(spark, embeddings):
     pairs = dedup.embedding_near_dups(embeddings, max_distance=0.8)
     rows = pairs.collect()
@@ -119,7 +106,6 @@ def test_lsh_signature_dim_mismatch_raises(spark):
     from pyspark.sql import functions as F
 
     from semtools_spark.operators.similarity import (
-        hyperplane_signature,
         int_hyperplane_signature,
         ivf_assign,
     )
@@ -129,7 +115,6 @@ def test_lsh_signature_dim_mismatch_raises(spark):
     ).withColumn("embedding", F.col("embedding").cast("array<float>"))
     for op in (
         lambda d: int_hyperplane_signature(d, n_planes=4, dim=8),
-        lambda d: hyperplane_signature(d, n_planes=4, dim=8),
         lambda d: ivf_assign(d, n_centroids=4, dim=8),
     ):
         with pytest.raises(Exception, match="length"):
@@ -243,17 +228,13 @@ def test_ivf_index_roundtrips_trained_codebook(spark, embeddings, tmp_path):
 
 
 def test_ann_recall_floors_vs_brute_force(spark, embeddings):
-    """Committed recall@10 floors for the approximate ANN paths vs exact
+    """Committed recall@10 floors for the approximate IVF path vs exact
     brute force — the oracle gates prove deterministic equivalence to the
     oracle's IDENTICAL approximation, not retrieval quality; this pins
-    quality so a codebook/plane regression fails a test instead of
-    silently degrading. Measured r4 on sf0.001 embeddings (uniform word-
-    soup vectors — a hard, clusterless case): IVF seeded nprobe=2/8 =
-    0.505, kmeans-trained = 0.605 (training buys +0.10), LSH 3-planes =
-    0.20 falling to 0.07 at 5 planes (finer buckets trade recall for
-    candidate-set size; at 8 planes / 256 buckets over 500 uniform
-    vectors recall is ~0 by design — bucket-kNN is for near-dup-dense
-    data, IVF is the uniform-topk path)."""
+    quality so a codebook regression fails a test instead of silently
+    degrading. Measured on sf0.001 embeddings (uniform word-soup vectors
+    — a hard, clusterless case): IVF seeded nprobe=2/8 = 0.505,
+    kmeans-trained = 0.605 (training buys +0.10)."""
     pdf = embeddings.select("vec_id", "embedding").toPandas()
     pdf = pdf.sort_values("vec_id")
     ids = np.asarray(pdf.vec_id, dtype=np.int64)
@@ -294,42 +275,51 @@ def test_ann_recall_floors_vs_brute_force(spark, embeddings):
     assert trained >= 0.58, trained
     assert trained > seeded, (trained, seeded)
 
-    def lsh_recall(planes):
-        hits = similarity.lsh_bucket_ann(
-            embeddings, k=10, n_planes=planes, dim=64, seed=42,
-            query_filter=F.col("vec_id").isin([int(x) for x in queries]),
-        )
-        got = {}
-        for r in hits.collect():
-            got.setdefault(r.q, set()).add(r.neighbor)
-        return float(
-            np.mean(
-                [len(exact_top10(q, True) & got.get(q, set())) / 10 for q in queries]
-            )
-        )
 
-    r3, r5 = lsh_recall(3), lsh_recall(5)
-    assert r3 >= 0.18, r3
-    assert r5 <= r3, (r5, r3)  # finer buckets monotonically trade recall
+def test_multi_probe_signatures_match_numpy(spark, documents):
+    """kg._embed_probe_udf (the LSH link's fused embed + multi-probe
+    signing) vs a full NumPy recomputation over the testdata texts plus
+    empty and NULL mentions: the embedding is HashEmbedder's,
+    probe_buckets[0] is the exact int signature and the probe set flips
+    exactly the n_probes lowest-|dot| bits in confidence order (ties to
+    the lower plane index)."""
+    from semtools_spark.embedding import HashEmbedder
+    from semtools_spark.operators import kg
 
-
-def test_multi_probe_signatures_match_numpy(spark, embeddings):
-    """multi_probe_signatures vs a full NumPy recomputation over the
-    testdata embeddings: probe_buckets[0] is the exact int signature and
-    the probe set flips exactly the n_probes lowest-|dot| bits in
-    confidence order (ties to the lower plane index)."""
     n_planes, n_probes, dim = 6, 2, 64
+    texts = [r.text for r in documents.select("text").collect()] + ["", None]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, m string")
     got = {
-        r.vec_id: list(r.probe_buckets)
-        for r in similarity.multi_probe_signatures(
-            embeddings, n_planes=n_planes, dim=dim, seed=42, n_probes=n_probes
-        ).select("vec_id", "probe_buckets").collect()
+        r.i: (list(r.p.embedding), list(r.p.probe_buckets))
+        for r in df.select(
+            "i", kg._embed_probe_udf(dim, 42, n_planes, n_probes)(F.col("m")).alias("p")
+        ).collect()
     }
-    pdf = embeddings.select("vec_id", "embedding").toPandas()
+    emb = HashEmbedder(dim=dim, seed=42).embed_texts([t or "" for t in texts])
     W = similarity.int_plane_weights(n_planes, dim, 42)
-    for vid, vec in zip(pdf.vec_id, pdf.embedding):
+    assert len(got) == len(texts)
+    for i, vec in enumerate(emb):
         d = np.floor(np.asarray(vec, np.float64) * 1e6).astype(np.int64) @ W.T
         base = int(((d > 0).astype(np.int64) << np.arange(n_planes)).sum())
         order = sorted(range(n_planes), key=lambda j: (abs(int(d[j])), j))
         want = [base] + [base ^ (1 << j) for j in order[:n_probes]]
-        assert got[vid] == want, (vid, got[vid], want)
+        assert got[i][0] == [float(x) for x in vec], i
+        assert got[i][1] == want, (i, got[i][1], want)
+
+
+def test_int_signature_udf_matches_jvm(spark, embeddings):
+    """kg._int_signature_udf (the LSH link's Arrow catalog signer) equals
+    the JVM int_hyperplane_signature on every testdata embedding, at a
+    plane count below, at and above one byte of signature."""
+    from semtools_spark.operators import kg
+
+    for n_planes in (4, 8, 13):
+        jvm = similarity.int_hyperplane_signature(
+            embeddings, n_planes=n_planes, dim=64, seed=42
+        ).select(
+            "vec_id",
+            "lsh_bucket",
+            kg._int_signature_udf(64, 42, n_planes)(F.col("embedding")).alias("udf"),
+        ).collect()
+        assert len(jvm) == 500
+        assert all(r.lsh_bucket == r.udf for r in jvm), n_planes

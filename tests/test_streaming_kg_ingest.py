@@ -92,6 +92,38 @@ def test_ingest_two_landings_then_refresh_matches_batch(spark, tmp_path):
     )
 
 
+def test_refresh_graph_releases_link_broadcasts(spark, tmp_path, monkeypatch):
+    """refresh_graph unpersists every catalog broadcast the link stage
+    attached once link.parquet is written, as the batch pipeline's
+    run_stage does. The LSH path (link_lsh_above below the 18-entity
+    catalog) always broadcasts its rescue sample."""
+    from pyspark.core.broadcast import Broadcast
+
+    src = str(tmp_path / "pages_bc")
+    out = str(tmp_path / "kg_bc")
+    _land(spark, src, 0, 20)
+    ingest_available(spark, src, out, checkpoint_dir=str(tmp_path / "ckpt_bc"))
+
+    made, released = [], []
+    real_link, real_unpersist = kg.link_entities, Broadcast.unpersist
+
+    def recording_link(*args, **kwargs):
+        linked = real_link(*args, **kwargs)
+        made.extend(linked._semtools_broadcasts)
+        return linked
+
+    def recording_unpersist(self, blocking=False):
+        released.append(self)
+        return real_unpersist(self, blocking)
+
+    monkeypatch.setattr(kg, "link_entities", recording_link)
+    monkeypatch.setattr(Broadcast, "unpersist", recording_unpersist)
+    rep = refresh_graph(spark, out, dim=32, seed=SEED, link_lsh_above=4)
+    assert rep["graph_rows"] > 0
+    assert made, "preconditions: the LSH link attached no broadcast"
+    assert all(any(b is r for r in released) for b in made)
+
+
 def test_ingest_batch_partition_is_replay_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: simulate a replay by re-running the
     same landing against a FRESH checkpoint (same batch id 0, same
